@@ -1,2 +1,1 @@
 from .core import safe_divide, null_if_zero_divide, count_if  # noqa: F401
-from .vectors import cosine_similarity, dot, l2_norm  # noqa: F401

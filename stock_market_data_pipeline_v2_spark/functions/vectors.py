@@ -1,8 +1,8 @@
 """Vector math over ``array<float|double>`` columns — JVM-side only.
 
-Used by the similarity-search / embedding-dedup operators. All three
-helpers compile to Catalyst higher-order functions (``zip_with`` +
-``aggregate``), so they run inside codegen with zero Python transfer —
+Used by the similarity-search / embedding-dedup operators. Every
+helper compiles to Catalyst expressions (``element_at`` sums,
+``transform``), so they run inside codegen with zero Python transfer —
 the brute-force ANN path stays scan-shaped at 100 TB (no UDF
 serialization on the hot loop).
 
@@ -15,29 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            a,
-            F.lit(0.0),
-            lambda acc, v: acc + v.cast("double") * v.cast("double"),
-        )
-    )
-
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """dot(a,b) / (||a||·||b||), NULL when either norm is zero."""
-    return dot(a, b) / F.nullif(l2_norm(a) * l2_norm(b), F.lit(0.0))
 
 
 def dot_unrolled(a: str, b: str, dim: int) -> Column:
@@ -99,9 +76,8 @@ def as_double(vec: Column) -> Column:
 def cosine_from_parts(dot_col: Column, norm_a: Column, norm_b: Column) -> Column:
     """cosine from a per-pair dot and PRE-COMPUTED per-vector norms.
 
-    Bit-identical to :func:`cosine_similarity` (same operand values,
-    same multiply/divide order) but norms are computed once per vector
-    instead of once per pair — the all-pairs cost drops from 3 to 1
-    array traversals per pair.
+    ``dot / (||a||·||b||)``, NULL when either norm is zero; norms are
+    computed once per vector instead of once per pair — the all-pairs
+    cost drops from 3 to 1 array traversals per pair.
     """
     return dot_col / F.nullif(norm_a * norm_b, F.lit(0.0))

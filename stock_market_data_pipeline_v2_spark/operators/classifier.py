@@ -289,7 +289,8 @@ def classifier_calibration(
     and divides once; min/max are exact order stats.
 
     100 TB shape: scoring/labeling are scan-shaped; the rank is one
-    range shuffle of the labeled slice; the report is an
+    range shuffle of the labeled slice, whose ranged+pid frame is
+    cached (release via ``_cached_inputs``); the report is an
     ``n_bins``-row aggregate, map-side combinable.
     """
     from pyspark.sql import Window
@@ -319,9 +320,15 @@ def classifier_calibration(
     j = lab.join(scored, "doc_id")
 
     par = documents.sparkSession.sparkContext.defaultParallelism
-    ranged = j.repartitionByRange(
-        par, F.asc("quality_logit"), F.asc("doc_id")
-    ).withColumn("__pid", F.spark_partition_id())
+    # cached per PERF.md lesson 8: the ranged frame's lineage is a
+    # join, and two independent evaluations can sample different
+    # range bounds, so the pid a row gets in the local-rank subtree
+    # need not match the offsets subtree
+    ranged = (
+        j.repartitionByRange(par, F.asc("quality_logit"), F.asc("doc_id"))
+        .withColumn("__pid", F.spark_partition_id())
+        .cache()
+    )
     w_loc = Window.partitionBy("__pid").orderBy(
         F.asc("quality_logit"), F.asc("doc_id")
     )
@@ -363,7 +370,7 @@ def classifier_calibration(
         F.min("quality_logit").alias("min_logit"),
         F.max("quality_logit").alias("max_logit"),
     )
-    return agg.select(
+    out = agg.select(
         "score_bin",
         "n_docs",
         "n_pos",
@@ -376,6 +383,8 @@ def classifier_calibration(
         "min_logit",
         "max_logit",
     ).orderBy("score_bin")
+    out._cached_inputs = (ranged,)  # type: ignore[attr-defined]
+    return out
 
 
 def classifier_calibration_oracle_sql(n_bins: int = 10) -> str:

@@ -12,7 +12,7 @@ Five tiers, each a DataFrame→DataFrame op:
    ``max_shingle_freq`` stop-list cap (drop shingles appearing in >N
    docs — standard inverted-index pruning that cannot create false
    positives, only prune candidates generated by ubiquitous shingles).
-3. :func:`minhash_signatures` / :func:`minhash_lsh_pairs` — the scale
+3. :func:`minhash_lsh_pairs` — the scale
    path: k-permutation MinHash (xxhash64 with per-permutation seeds)
    → banded LSH buckets → candidate pairs → EXACT Jaccard
    verification of candidates only. Linear in corpus size for the
@@ -248,18 +248,6 @@ def _band_key(band: int, rows_per_band: int) -> Column:
         f"h{band * rows_per_band + r}" for r in range(rows_per_band)
     )
     return F.expr(f"concat_ws('|', {cols})")
-
-
-def minhash_signatures(
-    documents: DataFrame, num_perm: int = 32, n: int = 3
-) -> DataFrame:
-    """k-permutation MinHash signatures: sig_i = min over shingles of
-    the md5-seeded double-hash family (see :func:`_signatures_from`).
-
-    One explode + one groupBy; signature state is k longs per doc,
-    all JVM-side Catalyst expressions.
-    """
-    return _signatures_from(word_shingles(documents, n), num_perm)
 
 
 def minhash_lsh_pairs(

@@ -146,23 +146,6 @@ ORDER BY hh.sector
 """
 
 
-def customer_geography(customer: DataFrame, nation: DataFrame, region: DataFrame) -> DataFrame:
-    """customer ⋈ nation ⋈ region (broadcast chain)."""
-    n = nation.select(
-        F.col("n_nationkey").alias("nationkey"),
-        F.col("n_name").alias("nation_name"),
-        F.col("n_regionkey").alias("regionkey"),
-    )
-    r = region.select(
-        F.col("r_regionkey").alias("regionkey"), F.col("r_name").alias("region_name")
-    )
-    fact = customer.withColumn("nationkey", F.col("c_nationkey"))
-    out = broadcast_dim_join(fact, n, keys=["nationkey"], how="inner")
-    return broadcast_dim_join(out, r, keys=["regionkey"], how="inner").drop(
-        "nationkey", "regionkey"
-    )
-
-
 def regional_customer_summary(
     customer: DataFrame, nation: DataFrame, region: DataFrame
 ) -> DataFrame:

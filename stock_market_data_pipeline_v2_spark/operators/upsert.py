@@ -56,19 +56,6 @@ def merge_upsert(
     )
 
 
-def latest_by_key(
-    df: DataFrame, keys: Sequence[str], order_cols: Sequence[str]
-) -> DataFrame:
-    """Keep the newest row per key (generalized P7 dedup with explicit
-    ordering instead of ``dropDuplicates``'s arbitrary pick)."""
-    w = Window.partitionBy(*keys).orderBy(*[F.col(c).desc() for c in order_cols])
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-
 def scd2_history(
     updates: DataFrame,
     key_col: str = "user_id",

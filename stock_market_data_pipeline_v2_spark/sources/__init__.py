@@ -1,7 +1,6 @@
 from .io import (  # noqa: F401
     load_table,
     read_csv,
-    read_parquet,
     write_parquet,
     write_clustered,
 )

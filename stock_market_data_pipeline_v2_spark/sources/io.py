@@ -30,6 +30,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from ..session import session_memo
+
 
 def read_csv(
     spark: SparkSession,
@@ -41,22 +43,6 @@ def read_csv(
     return spark.read.csv(path, header=header, schema=schema)
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
-
-
-# (r12 optimization) per-session PLAN memo for load_table: resolving
-# a parquet source costs a measured ~0.14 s of driver work PER CALL
-# (file listing + footer/schema resolution + py4j), and the bench
-# makes hundreds of load_table calls per run. The memoized value is
-# the LAZY analyzed DataFrame — an immutable plan, zero rows of
-# state: every action on it still scans the parquet files, so this
-# is plan-build amortization (guide §1.2 step 2 driver-side), not
-# result caching. Keyed by applicationId so a new session never sees
-# a stale plan.
-_LOAD_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one driver testdata table (TESTDATA.md).
 
@@ -65,17 +51,21 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     nanoseconds and is converted here to a microsecond timestamp
     (truncating division — the same ns→µs truncation DuckDB applies
     when casting TIMESTAMP_NS to TIMESTAMP).
+
+    Resolving a parquet source costs ~0.14 s of driver work (file
+    listing, footer/schema resolution, py4j), so the analysed plan is
+    memoised per session; each call gets a fresh Dataset over it.
     """
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _LOAD_TABLE_MEMO.get(key)
-    if df is None:
+
+    def build() -> DataFrame:
         df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn(
                 "ts", F.timestamp_micros(F.expr("ts div 1000"))
             )
-        _LOAD_TABLE_MEMO[key] = df
-    return df
+        return df
+
+    return session_memo(spark, sf_dir, f"{name}.parquet", build)
 
 
 def write_parquet(

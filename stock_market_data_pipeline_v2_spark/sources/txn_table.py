@@ -203,7 +203,7 @@ class TxnTable:
             if dup:
                 raise ValueError(
                     f"create(keys={list(keys)}) declared a key-unique base "
-                    "but duplicates exist; pre-dedup (latest_by_key) first"
+                    "but duplicates exist; pre-dedup to one row per key first"
                 )
             unique_on = list(keys)
         files, stats = t._stage(df, stats_col=zone_map_col)

@@ -77,10 +77,17 @@ def test_pricing_summary_pushdown_and_pruning(spark):
 def test_performance_mart_single_sort_lineage(spark):
     import __spark_entry__ as m
 
-    plan = _plan(m.queries()["stock_performance"](spark, SF))
+    # execute one mart first: the memoised plan must not hand its
+    # executed AQE state (final plan + "Initial Plan" subtree, which
+    # doubles every Exchange in the explain) to the next caller
+    first = m.queries()["stock_performance"](spark, SF)
+    first.collect()
+    df = m.queries()["stock_performance"](spark, SF)
+    plan = _plan(df)
     # all window families share one partitioning: exactly 2 exchanges
     # (bar-build agg + window partition), no join operators at all
     assert plan.count("Exchange hashpartitioning") == 2
+    assert df is not first
     for j in ("SortMergeJoin", "BroadcastHashJoin", "BroadcastNestedLoopJoin"):
         assert j not in plan
 

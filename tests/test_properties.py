@@ -178,16 +178,14 @@ def test_round_away_matches_duckdb_exactly(spark, values, scale):
 def test_rows_only_queries_are_deterministic(spark):
     """Every query WITHOUT a DuckDB oracle must still be bit-stable:
     run twice at sf0.001 and compare full sorted results. The oracle
-    gate pins the other 85; this guards the rows-only 15 against a
-    rand()/partitioning dependency slipping in (approximate tiers are
-    seeded-deterministic BY DESIGN here — recall is bounded, results
-    are not allowed to wobble)."""
+    gate pins the other 207; this guards the two rows-only queries
+    against a rand()/partitioning dependency slipping in."""
     import __spark_entry__ as m
 
     sf = "/root/testdata/sf0.001"
     qs, os_ = m.queries(), m.oracle_sql()
     rows_only = sorted(set(qs) - set(os_))
-    assert rows_only  # the 15 documented ones
+    assert rows_only == ["image_features", "windowed_analytics_reagg"]
     for name in rows_only:
         a = [tuple(r) for r in qs[name](spark, sf).collect()]
         b = [tuple(r) for r in qs[name](spark, sf).collect()]

@@ -63,6 +63,36 @@ def test_sql_twin_matches_dataframe(spark):
     assert via_sql == via_df
 
 
+def test_session_memo_builds_once_and_hands_out_fresh_datasets(spark):
+    """session_memo builds once per (session, sf_dir, name). A
+    DataFrame value comes back as a fresh Dataset on every call, so
+    one caller's executed AQE plan never reaches the next caller; any
+    other value (an index, a table handle) comes back as is."""
+    from stock_market_data_pipeline_v2_spark.session import session_memo
+
+    builds = []
+
+    def build():
+        builds.append(1)
+        return spark.range(10).groupBy((F.col("id") % 3).alias("k")).count()
+
+    first = session_memo(spark, "memo-test", "grouped", build)
+    rows = sorted(map(tuple, first.collect()))
+    second = session_memo(spark, "memo-test", "grouped", build)
+    assert len(builds) == 1
+    assert second is not first
+
+    def final(df):
+        return "isFinalPlan=true" in df._jdf.queryExecution().executedPlan().toString()
+
+    assert final(first) and not final(second)
+    assert sorted(map(tuple, second.collect())) == rows
+
+    index = object()
+    assert session_memo(spark, "memo-test", "index", lambda: index) is index
+    assert session_memo(spark, "memo-test", "index", object) is index
+
+
 def test_save_as_table(spark, tmp_path):
     from stock_market_data_pipeline_v2_spark.plans.sql_api import save_as_table
 
